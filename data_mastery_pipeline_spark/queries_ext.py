@@ -229,7 +229,14 @@ def exact_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram/token-set Jaccard near-dup pairs with deterministic
     (lang, length) blocking — the exact, oracle-checkable twin of the
-    MinHash path."""
+    MinHash path.
+
+    Its edge definition (same lang + length within ±20%) differs from
+    the one the cluster family uses: near_dup_clusters,
+    near_dup_canonical, near_dup_cluster_sizes and leakage_safe_splits
+    also require the two docs to share a simhash cell
+    (jaccard_pairs_celled, see _SQL_CELLED_BASE), so their edges are a
+    subset of these pairs."""
     docs = load_table(spark, "documents", sf_dir)
     pairs = dedup_ngram.jaccard_pairs_blocked(
         docs, block_cols=("lang",), length_tolerance=0.2, threshold=0.35
@@ -930,7 +937,7 @@ _SQL_CELLED_BASE = f"""tok AS (
         SELECT doc_id, ({_SQL_CELL_FP})::BIGINT AS fp FROM cnt
     ), nb AS (
         SELECT LEAST(18, GREATEST(3,
-                 CAST(ceil(log2(count(*) / {dedup_ngram.CELL_TARGET}.0)) AS INT))) AS b
+                 CAST(ceil(log2(greatest(count(*), 1) / {dedup_ngram.CELL_TARGET}.0)) AS INT))) AS b
         FROM fp
     ), base AS (
         SELECT d.doc_id, d.lang, list_distinct({_SQL_TOKS}) AS toks,
@@ -1023,54 +1030,17 @@ def near_dup_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (J = 1) are co-celled with probability 1 by construction — which is
     the regime real dedup blocking operates in; the knob is
     dedup_ngram.CELL_TARGET (bigger cells = more recall = proportionally
-    more mass)."""
+    more mass). The certificate reads the same materialized token base
+    and verify join as the cluster family (dedup_ngram._token_base /
+    _verified_pairs), with the cell carried through instead of joined
+    on."""
     docs = load_table(spark, "documents", sf_dir)
-    nn = docs.filter(F.col("text").isNotNull())
-    b = dedup_ngram.cell_bits(nn.count())
-    hashes, fold = dedup_ngram._cell_fp_col("text")
-    base = (
-        nn.select(
-            "doc_id",
-            "lang",
-            F.array_distinct(textfn.tokens("text")).alias("toks"),
-            hashes.alias("__h"),
-        )
-        .withColumn("n_toks", F.size("toks"))
-        .withColumn(
-            "cell",
-            F.shiftrightunsigned(F.expr(fold), dedup_ngram._FP_BITS - b).cast(
-                "bigint"
-            ),
-        )
-        .drop("__h")
+    base = dedup_ngram._token_base(
+        docs, "text", "doc_id", ("lang",), target_cell=dedup_ngram.CELL_TARGET
     )
-    probes = base.filter(F.col("doc_id") < 1000)
-    a = probes.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("toks").alias("toks_a"),
-        F.col("n_toks").alias("n_a"),
-        F.col("cell").alias("cell_a"),
-    )
-    bs = probes.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("toks").alias("toks_b"),
-        F.col("n_toks").alias("n_b"),
-        F.col("cell").alias("cell_b"),
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-    union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
-    truep = (
-        a.join(
-            F.broadcast(bs),
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("lang_a") == F.col("lang_b"))
-            & F.col("n_b").between(F.col("n_a") * 0.8, F.col("n_a") * 1.2),
-        )
-        .filter((inter / union) >= 0.35)
-        .select((F.col("cell_a") == F.col("cell_b")).alias("comatch"))
-    )
+    truep = dedup_ngram._verified_pairs(
+        base.filter(F.col("id") < 1000), ("lang",), 0.2, 0.35, carry=("cell",)
+    ).select((F.col("cell_a") == F.col("cell_b")).alias("comatch"))
     hits = F.coalesce(
         F.sum(F.when(F.col("comatch"), 1).otherwise(0)), F.lit(0)
     ).cast("long")

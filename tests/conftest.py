@@ -24,7 +24,10 @@ deep property sweep:
   CC vs brute, salted-vs-plain …) — the single heaviest file; its
   invariants are spot-pinned by the per-operator fast suites;
 - test_txlog + test_streaming: full lifecycle/multi-batch machinery
-  sweeps (many sequential bounded actions each).
+  sweeps (many sequential bounded actions each);
+- test_search: SearchIndex incremental-maintenance sweeps — every DML
+  shape (append, delete, UPDATE, vacuum, replay) checked against a
+  from-scratch rebuild, each a run of sequential txlog commits.
 """
 
 from __future__ import annotations

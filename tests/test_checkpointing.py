@@ -68,6 +68,6 @@ def test_known_data_sized_sites_are_flagged():
     src = inspect.getsource(corpus_pipeline)
     assert 'footprint="data"' in src  # the per-stage ckpt lambda
     src = inspect.getsource(ngram)
-    assert 'footprint="data"' in src  # PPJoin hashed-token base
+    assert 'footprint="data"' in src  # the shared Jaccard token base
     src = inspect.getsource(txlog)
     assert src.count('footprint="data"') >= 2  # DV matched rows, merge updates

@@ -201,3 +201,30 @@ def test_cosine_nan_component_is_null(spark):
     # the corrupt row must NOT occupy the top of a top-k
     top = brute.cosine_topk(df, [1.0, 0.0], k=2).collect()
     assert [r["vec_id"] for r in top] == [1, 2]
+
+
+@pytest.mark.parametrize("corpus", ["empty", "all_null_text"])
+def test_near_dup_family_total_on_degenerate_corpus(spark, tmp_path, corpus):
+    """A 0-row corpus and an all-NULL-text corpus (sf0.001 schema): the
+    celled cluster family, its recall certificate and the blocked pair
+    query complete on both engines and agree. The oracle's cell-width
+    mirror once took log2(0) here while the Spark side clamped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import data_mastery_pipeline_spark.queries_ext  # noqa: F401 — registers
+    from conftest import SF_SMOKE
+
+    docs = pq.read_table(f"{SF_SMOKE}/documents.parquet")
+    if corpus == "empty":
+        docs = docs.slice(0, 0)
+    else:
+        docs = docs.slice(0, 20)
+        i = docs.schema.get_field_index("text")
+        docs = docs.set_column(i, "text", pa.nulls(docs.num_rows, pa.string()))
+    d = str(tmp_path)
+    (tmp_path / "documents.parquet").mkdir()
+    pq.write_table(docs, f"{d}/documents.parquet/part-0.parquet")
+    for name in ("near_dup_clusters", "near_dup_blocking_recall", "ngram_jaccard_pairs"):
+        srows, orows = _run_both(spark, d, name, ["documents"])
+        assert srows == orows, name

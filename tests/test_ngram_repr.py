@@ -1,7 +1,8 @@
 """Both Jaccard set representations (int64 bitmask for ≤63-token
 vocabularies, hashed int arrays otherwise) against brute-force ground
 truth — the oracle corpora are all small-vocab, so the array branch
-would otherwise be unexercised."""
+would otherwise be unexercised — plus the shape of the celled pair
+plan."""
 
 from __future__ import annotations
 
@@ -37,10 +38,10 @@ def _corpus(vocab):
     return rows
 
 
-def _run(spark, rows, **kw):
+def _run(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     got = ngram.jaccard_pairs_blocked(
-        df, length_tolerance=0.5, threshold=0.5, **kw
+        df, length_tolerance=0.5, threshold=0.5
     ).collect()
     return {(r["id_a"], r["id_b"]): round(r["jaccard"], 6) for r in got}
 
@@ -53,24 +54,23 @@ def test_bitmask_branch_matches_brute_force(spark):
     assert got  # the corpus genuinely contains qualifying pairs
 
 
-def test_array_branch_matches_brute_force_and_bitmask_semantics(spark):
-    vocab = [f"w{i}" for i in range(120)]  # >63 → array path under auto
+def _force_array(monkeypatch):
+    """Pin the vocabulary probe to "too large" so the base takes the
+    hashed-array representation whatever the corpus."""
+    monkeypatch.setattr(ngram, "_small_vocab", lambda *a, **k: None)
+
+
+def test_array_branch_matches_brute_force_and_bitmask_semantics(spark, monkeypatch):
+    vocab = [f"w{i}" for i in range(120)]  # >63 → array path
     rows = _corpus(vocab)
     got_auto = _run(spark, rows)
     assert got_auto == _brute_pairs(rows, 0.5)
     # forcing the array path on the SMALL-vocab corpus must reproduce
     # the bitmask branch bit-for-bit
     small_rows = _corpus([f"w{i}" for i in range(40)])
-    assert _run(spark, small_rows, set_repr="array") == _run(spark, small_rows)
-
-
-def test_bitmask_request_on_large_vocab_is_loud(spark):
-    import pytest
-
-    rows = _corpus([f"w{i}" for i in range(120)])
-    df_rows = rows
-    with pytest.raises(ValueError, match="bitmask"):
-        _run(spark, df_rows, set_repr="bitmask")
+    bitmask = _run(spark, small_rows)
+    _force_array(monkeypatch)
+    assert _run(spark, small_rows) == bitmask
 
 
 def test_bitmask_out_of_vocab_token_fails_loudly(spark, monkeypatch):
@@ -109,20 +109,15 @@ def test_lossless_length_bound_finds_containment_pairs(spark):
         docs, threshold=t, length_tolerance=None
     ).collect()
     assert [(r["id_a"], r["id_b"]) for r in loose] == [(1, 2)]
-    # prefix path agrees under the same bound
-    loose_p = ngram.jaccard_pairs_prefix(
-        docs, threshold=t, length_tolerance=None
-    ).collect()
-    assert [(r["id_a"], r["id_b"]) for r in loose_p] == [(1, 2)]
 
 
 # --- simhash-cell blocked pairs (r12 near_dup_clusters re-scope) ----------
 
 
-def _run_celled(spark, rows, **kw):
+def _run_celled(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     got = ngram.jaccard_pairs_celled(
-        df, length_tolerance=0.5, threshold=0.5, **kw
+        df, length_tolerance=0.5, threshold=0.5
     ).collect()
     return {(r["id_a"], r["id_b"]): round(r["jaccard"], 6) for r in got}
 
@@ -149,14 +144,35 @@ def test_celled_pairs_are_blocked_pairs_restricted_to_cells(spark):
     assert exact_pairs <= set(celled)
 
 
-def test_celled_repr_parity_bitmask_vs_array(spark):
+def test_celled_repr_parity_bitmask_vs_array(spark, monkeypatch):
     """Both set representations produce identical celled pairs (the
     blocked-path guarantee extended to the celled path)."""
-    vocab = [f"t{i}" for i in range(20)]  # ≤63 → auto picks bitmask
+    vocab = [f"t{i}" for i in range(20)]  # ≤63 → the probe picks bitmask
     rows = _corpus(vocab)
     auto = _run_celled(spark, rows)
-    arr = _run_celled(spark, rows, set_repr="array")
+    _force_array(monkeypatch)
+    arr = _run_celled(spark, rows)
     assert auto == arr and auto
+
+
+def test_celled_pair_plan_reads_the_materialized_base_only(spark):
+    """Both join sides read the ONE materialized token base: the pair
+    frame's plan has no parquet scan of documents and no fingerprint
+    fold (an ``aggregate(`` lambda) inside any Filter condition."""
+    import re
+
+    from conftest import SF_SMOKE
+    from data_mastery_pipeline_spark import plans
+    from data_mastery_pipeline_spark.tables import load_table
+
+    docs = load_table(spark, "documents", SF_SMOKE)
+    pairs = ngram.jaccard_pairs_celled(
+        docs, block_cols=("lang",), length_tolerance=0.2, threshold=0.35
+    )
+    plan = plans.formatted_plan(pairs)
+    assert "Scan parquet" not in plan and "documents.parquet" not in plan, plan
+    conditions = re.findall(r"\) Filter\s*\nInput .*\nCondition : (.*)", plan)
+    assert not [c for c in conditions if "aggregate(" in c], plan
 
 
 def test_cell_bits_clamp_and_growth():
