@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
+from ..functions.veclit import double_array_sql
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<double> columns (left-to-right fold —
@@ -48,6 +50,28 @@ def cosine(a: Column, b: Column) -> Column:
     are where such rows should be quarantined upstream."""
     raw = F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
     return F.nanvl(raw, F.lit(None).cast("double"))
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+        "(acc, v) -> acc + v)"
+    )
+
+
+def cosine_to(vec_col: str, query_vec) -> Column:
+    """``cosine(col(vec_col).cast("array<double>"),
+    double_array_lit(query_vec))`` as ONE SQL expression — the same
+    expression tree, so the same doubles (NULL on a zero norm or a NaN
+    component), built in one py4j call instead of the three Python
+    lambda folds' dozens (the functions/veclit.py rule applied to the
+    query-vector re-rank)."""
+    a = f"CAST(`{vec_col}` AS array<double>)"
+    b = double_array_sql(query_vec)
+    norms = f"sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)})"
+    return F.expr(
+        f"nanvl(try_divide({_dot_sql(a, b)}, {norms}), CAST(NULL AS double))"
+    )
 
 
 def cosine_near_dups(

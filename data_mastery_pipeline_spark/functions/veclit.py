@@ -51,8 +51,11 @@ def double_array_lit(vals: Sequence[float]) -> Column:
     return F.expr(double_array_sql(vals))
 
 
+def double_matrix_sql(rows: Sequence[Sequence[float]]) -> str:
+    """The SQL text of an ``array<array<double>>`` literal."""
+    return "array(" + ",".join(double_array_sql(r) for r in rows) + ")"
+
+
 def double_matrix_lit(rows: Sequence[Sequence[float]]) -> Column:
     """``array<array<double>>`` literal column in one py4j call."""
-    return F.expr(
-        "array(" + ",".join(double_array_sql(r) for r in rows) + ")"
-    )
+    return F.expr(double_matrix_sql(rows))

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import text as textfn
-from .localrel import local_frame
+from .localrel import local_frame, sql_string
 from .sources.txlog import TxTable
 
 K1 = 1.2
@@ -60,19 +60,20 @@ def bm25_score(terms: list[str]):
     """The shared BM25 column expression: requires columns tf{i}, dl,
     and the broadcast stats columns n, avgdl, df{i}. Built ONCE here so
     the scan path (bm25_search) and the index path (SearchIndex.query)
-    fold the identical tree left-to-right — bit-identical doubles."""
-    score = None
-    for i in range(len(terms)):
-        idf = F.log(
-            (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5)
-            + 1.0
-        )
-        term = idf * (F.col(f"tf{i}") * (K1 + 1.0)) / (
-            F.col(f"tf{i}")
-            + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl"))
-        )
-        score = term if score is None else score + term
-    return score
+    fold the identical tree left-to-right — bit-identical doubles.
+    One SQL expression (one py4j call, the functions/veclit.py rule);
+    ``repr`` + ``D`` pins each constant to the double Python computes."""
+
+    def d(x: float) -> str:
+        return repr(x) + "D"
+
+    def term(i: int) -> str:
+        df, tf = f"df{i}", f"tf{i}"
+        idf = f"ln((((n - {df}) + 0.5D) / ({df} + 0.5D)) + 1.0D)"
+        norm = f"((((dl * {d(B)}) / avgdl) + {d(1.0 - B)}) * {d(K1)})"
+        return f"(({idf} * ({tf} * {d(K1 + 1.0)})) / ({tf} + {norm}))"
+
+    return F.expr(" + ".join(term(i) for i in range(len(terms))))
 
 
 class SearchIndex:
@@ -256,67 +257,89 @@ class SearchIndex:
 
     # -- query ------------------------------------------------------------
 
-    def _alive(self, df: DataFrame) -> DataFrame:
-        """Tombstone filter: a row is live iff its gen ≥ the max
-        killed_upto for its doc (fresh generations outlive the
-        tombstone that killed their predecessors). Tombstone set is
-        bounded by total deletes and broadcast."""
-        dead = self.tombstones.read().groupBy("doc_id").agg(
-            F.max("killed_upto").alias("__killed")
+    def _dead(self) -> DataFrame:
+        """(__tdoc, __killed): the tombstones, from ONE read of their
+        snapshot."""
+        return self.tombstones.read().selectExpr(
+            "doc_id AS __tdoc", "killed_upto AS __killed"
         )
-        return (
-            df.join(F.broadcast(dead), "doc_id", "left")
-            .filter(
-                F.col("__killed").isNull()
-                | (F.col("gen") >= F.col("__killed"))
-            )
-            .drop("__killed")
+
+    @staticmethod
+    def _alive(df: DataFrame, dead: DataFrame) -> DataFrame:
+        """Tombstone filter: a row is live iff no tombstone of its doc
+        has killed_upto > its gen, i.e. gen ≥ the doc's max
+        killed_upto (fresh generations outlive the tombstone that
+        killed their predecessors). One broadcast left-anti join: the
+        tombstone set is bounded by total deletes."""
+        return df.join(
+            F.broadcast(dead),
+            F.expr("doc_id = __tdoc AND __killed > gen"),
+            "left_anti",
         )
 
     def query(self, terms: list[str], k: int = 20) -> DataFrame:
         """BM25 top-k for ``terms`` served from the index: opens only
-        the postings files whose term stats cover a query term (the
-        scan() probe), never the corpus. Returns (doc_id, raw_score)
-        ordered score DESC, doc_id ASC."""
-        parts = None
-        for t in terms:
-            p, _ = self.postings.scan({"term": (t, t)})
-            parts = p if parts is None else parts.unionByName(p)
-        live = self._alive(parts)
+        the postings files whose term stats cover a query term, never
+        the corpus. Returns (doc_id, raw_score) ordered score DESC,
+        doc_id ASC.
+
+        Each index table is read ONCE, from one snapshot: postings via
+        ``scan_in`` (the union of each term's stats-pruned files, no
+        file more than per-term probes would open), doclens whole, and
+        tombstones once for both liveness joins. Corpus stats (n,
+        avgdl) and every term's df come from ONE aggregate over live
+        doclens ∪ live postings, behind ONE broadcast; all of its
+        inputs are integers, so the doubles are bit-identical to the
+        scan path. A delete-free index has an empty tombstones
+        snapshot — a JVM empty LocalRelation — so both liveness joins
+        fold away at optimization and the collect runs 4 Spark jobs
+        (pivot shuffle, stats shuffle, stats broadcast, result).
+        Expressions are SQL text, one py4j call each: building the
+        plan is a few JVM analyses, not hundreds of round trips."""
+        dead = self._dead()
+        postings, _ = self.postings.scan_in("term", terms)
+        live = self._alive(postings, dead)
+        is_term = [f"term = {sql_string(t)}" for t in terms]
         # pivot to one row per doc with a tf column per term — the
         # EXACT column layout bm25_score expects, so the fold order
         # matches the scan path term-for-term
-        pivoted = live.groupBy("doc_id", "dl").agg(
+        dl = F.expr("CAST(dl AS DOUBLE) AS dl")
+        pivoted = live.groupBy("doc_id", dl).agg(
             *[
-                F.coalesce(
-                    F.sum(F.when(F.col("term") == t, F.col("tf"))),
-                    F.lit(0),
+                F.expr(
+                    f"CAST(coalesce(sum(CASE WHEN {e} THEN tf END), 0) "
+                    f"AS DOUBLE) AS tf{i}"
                 )
-                .cast("double")
-                .alias(f"tf{i}")
-                for i, t in enumerate(terms)
+                for i, e in enumerate(is_term)
             ]
         )
-        lens = self._alive(self.doclens.read())
-        stats = lens.agg(
-            F.count("*").cast("double").alias("n"),
-            F.avg("dl").alias("avgdl"),
+        # doclens rows carry (__doc=1, dl), postings rows (term): one
+        # aggregate counts docs and averages dl over the former only
+        # and counts each term's df over the latter only
+        lens = self._alive(self.doclens.read(), dead).selectExpr(
+            "1 AS __doc", "dl", "CAST(NULL AS STRING) AS term"
         )
-        dfs = live.groupBy().agg(
+        stats = lens.unionByName(
+            live.selectExpr(
+                "CAST(NULL AS INT) AS __doc",
+                "CAST(NULL AS BIGINT) AS dl",
+                "term",
+            )
+        ).agg(
+            F.expr("CAST(count(__doc) AS DOUBLE) AS n"),
+            F.expr("avg(dl) AS avgdl"),
             *[
-                F.sum(F.when(F.col("term") == t, 1).otherwise(0))
-                .cast("double")
-                .alias(f"df{i}")
-                for i, t in enumerate(terms)
-            ]
+                F.expr(
+                    f"CAST(sum(CASE WHEN {e} THEN 1 ELSE 0 END) AS DOUBLE) "
+                    f"AS df{i}"
+                )
+                for i, e in enumerate(is_term)
+            ],
         )
-        scored = (
-            pivoted.withColumn("dl", F.col("dl").cast("double"))
-            .crossJoin(F.broadcast(stats))
-            .crossJoin(F.broadcast(dfs))
-            .select("doc_id", bm25_score(terms).alias("raw_score"))
+        scored = pivoted.crossJoin(F.broadcast(stats)).select(
+            "doc_id", bm25_score(terms).alias("raw_score")
         )
-        return scored.orderBy(F.col("raw_score").desc(), "doc_id").limit(k)
+        return scored.orderBy(F.desc("raw_score"), "doc_id").limit(k)
 
     # -- maintenance --------------------------------------------------------
 
@@ -331,11 +354,12 @@ class SearchIndex:
         if dead_rows == 0:
             return {"tombstones_folded": 0}
         lo, hi = -(1 << 62), 1 << 62
+        dead = self._dead()
         self.postings.replace_where(
-            "doc_id", lo, hi, self._alive(self.postings.read())
+            "doc_id", lo, hi, self._alive(self.postings.read(), dead)
         )
         self.doclens.replace_where(
-            "doc_id", lo, hi, self._alive(self.doclens.read())
+            "doc_id", lo, hi, self._alive(self.doclens.read(), dead)
         )
         self.tombstones.delete_where("doc_id", lo, hi)
         return {"tombstones_folded": int(dead_rows)}

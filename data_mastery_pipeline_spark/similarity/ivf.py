@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
-from ..dedup.embedding import cosine
+from ..dedup.embedding import cosine_to
 from ..functions.veclit import double_array_lit
 
 
@@ -181,7 +181,6 @@ def ivf_topk(
     and the filter prunes the materialized layout instead of
     re-deriving cells per query."""
     probes = _probe_cells(list(query_vec), centroids, n_probes)
-    q = double_array_lit(query_vec)
     src = (
         df
         if "cell" in df.columns
@@ -189,7 +188,7 @@ def ivf_topk(
     )
     scored = (
         src.filter(F.col("cell").isin(probes))
-        .select(F.col(id_col), cosine(F.col(vec_col).cast("array<double>"), q).alias("cos"))
+        .select(F.col(id_col), cosine_to(vec_col, query_vec).alias("cos"))
     )
     return scored.orderBy(F.desc("cos"), F.col(id_col)).limit(k)
 

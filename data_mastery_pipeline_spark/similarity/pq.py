@@ -33,8 +33,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dedup.embedding import cosine
-from ..functions.veclit import double_array_lit, double_matrix_lit
+from ..dedup.embedding import cosine_to
+from ..functions.veclit import double_matrix_lit, double_matrix_sql
 from .ivf import _l2sq_to, _probe_cells, assign_cells
 
 
@@ -247,24 +247,21 @@ def adc_shortlist(
     # fused upstream of a fresh encode, the whole interpreted
     # higher-order encode expression — was evaluated n_probes times.
     # Here the row's probe ordinal indexes a nested LUT literal and the
-    # isin filter still prunes cell partitions on a cell-partitioned
-    # codes table.
-    probe_arr = F.array(*[F.lit(int(c)) for c in probes])
+    # IN filter still prunes cell partitions on a cell-partitioned
+    # codes table. The distance is ONE SQL expression (one py4j call,
+    # the functions/veclit.py rule), summed left to right.
+    cells = ",".join(str(int(c)) for c in probes)
     # array_position returns BIGINT; element_at's index must be INT
-    pidx = F.array_position(probe_arr, F.col("cell")).cast("int")
-    dist = None
-    for i in range(m):
-        lut_i = double_matrix_lit(
-            [luts[p][i] for p in range(len(probes))]
-        )
-        term = F.element_at(
-            F.element_at(lut_i, pidx),
-            F.element_at(F.col("codes"), i + 1) + 1,
-        )
-        dist = term if dist is None else dist + term
+    pidx = f"CAST(array_position(array({cells}), cell) AS INT)"
+    dist = " + ".join(
+        f"element_at(element_at("
+        f"{double_matrix_sql([luts[p][i] for p in range(len(probes))])}, "
+        f"{pidx}), element_at(codes, {i + 1}) + 1)"
+        for i in range(m)
+    )
     return (
-        codes_df.filter(F.col("cell").isin([int(c) for c in probes]))
-        .select(F.col(id_col), dist.alias("adc"))
+        codes_df.filter(F.expr(f"cell IN ({cells})"))
+        .select(F.col(id_col), F.expr(dist).alias("adc"))
         .orderBy(F.asc("adc"), F.col(id_col))
         .limit(n)
     )
@@ -290,13 +287,9 @@ def ivfpq_topk(
         codes_df, centroids, codebooks, q,
         max(k, k * refine), n_probes, id_col,
     )
-    qlit = double_array_lit(q)
     return (
         vectors_df.join(F.broadcast(shortlist.select(id_col)), id_col)
-        .select(
-            F.col(id_col),
-            cosine(F.col(vec_col).cast("array<double>"), qlit).alias("cos"),
-        )
+        .select(F.col(id_col), cosine_to(vec_col, q).alias("cos"))
         .orderBy(F.desc("cos"), F.col(id_col))
         .limit(k)
     )

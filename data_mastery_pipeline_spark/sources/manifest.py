@@ -121,7 +121,7 @@ def skipping_scan_multi(
         # "path not specified" — fail with the actual cause instead.
         # (No schema travels with the manifest, so an empty DataFrame
         # can't be synthesized here; callers with a schema in hand can
-        # spark.createDataFrame([], schema) on this error.)
+        # localrel.empty_frame(spark, schema) on this error.)
         raise ValueError(
             "skipping_scan: manifest lists zero files — build the "
             "manifest over a non-empty dataset or handle the empty case upstream"

@@ -26,6 +26,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..localrel import local_frame
+
 try:  # Spark >= 4.0
     from pyspark.sql.datasource import (
         DataSource,
@@ -326,10 +328,10 @@ def read_weather_driver_side(
     fetch_fn: Callable[[str, int], dict] = synthetic_fetch,
 ) -> DataFrame:
     """Driver-side fallback (the reference's own loop shape): fetch all
-    cities in-process, then parallelize. Fine for 5 cities; the data
-    source above is the scale path."""
+    cities in-process, then ship them as a plan literal. Fine for 5
+    cities; the data source above is the scale path."""
     rows = [r for c in cities if (r := parse_weather(fetch_fn(c, epoch))) is not None]
-    return spark.createDataFrame(rows, WEATHER_SCHEMA)
+    return local_frame(spark, rows, WEATHER_SCHEMA)
 
 
 def stream_weather(

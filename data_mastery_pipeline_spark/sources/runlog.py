@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..localrel import local_frame
+
 RUNLOG_SCHEMA = T.StructType(
     [
         T.StructField("execution_id", T.StringType(), False),
@@ -69,10 +71,10 @@ class StageRun:
         )
 
     def success(self, spark: SparkSession, rows: int | None = None, meta: str | None = None) -> DataFrame:
-        return spark.createDataFrame([self._row("success", rows, None, meta)], RUNLOG_SCHEMA)
+        return local_frame(spark, [self._row("success", rows, None, meta)], RUNLOG_SCHEMA)
 
     def failure(self, spark: SparkSession, error: str, meta: str | None = None) -> DataFrame:
-        return spark.createDataFrame([self._row("failed", None, error[:2000], meta)], RUNLOG_SCHEMA)
+        return local_frame(spark, [self._row("failed", None, error[:2000], meta)], RUNLOG_SCHEMA)
 
 
 def run_stage(

@@ -21,6 +21,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localrel import local_frame
+
 _CONFS = {
     "spark.sql.parquet.aggregatePushdown": "true",
     # aggregate pushdown is a DSv2 capability; parquet reads default to
@@ -67,4 +69,4 @@ def stats_only_aggregates(
         # materialize inside the conf window so the collected values
         # really came from the pushed plan
         rows = df.collect()
-    return spark.createDataFrame(rows, df.schema)
+    return local_frame(spark, rows, df.schema)

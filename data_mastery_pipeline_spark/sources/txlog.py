@@ -93,6 +93,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..localrel import empty_frame, local_frame
+
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
 _VERSION_RE = re.compile(r"^(\d{20})\.json$")
@@ -161,6 +163,11 @@ def _file_stats(abspath: str, stat_cols: list[str]) -> tuple[int, dict]:
         if ok and mn is not None:
             out[col] = [mn, mx, nulls]
     return meta.num_rows, out
+
+
+def _ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _overlaps(stats: dict, col: str, lo, hi) -> bool:
@@ -503,7 +510,8 @@ class TxTable:
             )
             for a in self.snapshot_adds()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "path string, size bigint, num_records bigint, "
             "min_values map<string,string>, max_values map<string,string>, "
@@ -517,7 +525,8 @@ class TxTable:
             (h["version"], h["op"], h["n_adds"], h["n_removes"], h["txn"])
             for h in self.history()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "version bigint, op string, n_adds int, n_removes int, "
             "txn string",
@@ -636,18 +645,20 @@ class TxTable:
         a broadcast anti-join — the merge-on-read cost is one broadcast
         probe per row, no shuffle of the table side."""
         if not rels:
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         df = self.spark.read.schema(self._phys_struct(schema, mapping)).parquet(
             *[os.path.join(self.root, r) for r in sorted(rels)]
         )
         m = mapping or {}
+        # one selectExpr call: per-column Column objects cost a py4j
+        # round trip each at plan-build time
         logical = [
-            F.col(m.get(f.name, f.name)).alias(f.name)
+            f"{_ident(m.get(f.name, f.name))} AS {_ident(f.name)}"
             for f in schema.fields
         ]
         dv = self._dv_frame(dvs, restrict=set(rels))
         if dv is None:
-            return df.select(*logical)
+            return df.selectExpr(*logical) if m else df
         return (
             df.withColumn("__rel", self._rel_path_col())
             .withColumn("__pos", F.col("_metadata.row_index"))
@@ -658,7 +669,7 @@ class TxTable:
                 ["__rel", "__pos"],
                 "left_anti",
             )
-            .select(*logical)
+            .selectExpr(*logical)
         )
 
     def read(
@@ -693,6 +704,49 @@ class TxTable:
         result is exact, pruning is only a file-count optimization."""
         meta, live, _, dvs = self._state_at(self.version())
         schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        keep, bloom_pruned = self._prune(meta, live, schema, preds)
+        stats = {
+            "files_total": len(live),
+            "files_read": len(keep),
+            "files_bloom_pruned": bloom_pruned,
+        }
+        df = self._read_files(
+            schema, [a["path"] for a in keep], dvs, self._col_mapping(meta)
+        )
+        for c, (lo, hi) in preds.items():
+            df = df.filter((F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi)))
+        return df, stats
+
+    def scan_in(self, col: str, values) -> tuple[DataFrame, dict]:
+        """Point lookups ``col IN values`` as ONE read of one snapshot:
+        the file set is the union of the files :meth:`scan` would open
+        for each ``{col: (v, v)}`` probe — no file more — and the
+        residual ``col IN values`` filter is re-applied.
+        ``files_bloom_pruned`` is summed over the probes."""
+        meta, live, _, dvs = self._state_at(self.version())
+        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        keep: set[str] = set()
+        bloom_pruned = 0
+        for v in values:
+            files, pruned = self._prune(meta, live, schema, {col: (v, v)})
+            keep.update(a["path"] for a in files)
+            bloom_pruned += pruned
+        stats = {
+            "files_total": len(live),
+            "files_read": len(keep),
+            "files_bloom_pruned": bloom_pruned,
+        }
+        df = self._read_files(
+            schema, sorted(keep), dvs, self._col_mapping(meta)
+        )
+        return df.filter(F.col(col).isin(list(values))), stats
+
+    def _prune(
+        self, meta: dict, live: dict, schema: T.StructType, preds: dict
+    ) -> tuple[list[dict], int]:
+        """The live adds a ``preds`` scan must open (log min/max stats,
+        then bloom bitmaps for equality predicates), and how many the
+        blooms pruned."""
         # stats are keyed by PHYSICAL name (stable across renames, so
         # pre-rename files keep pruning) — translate the predicates
         phys_preds = dict(
@@ -742,17 +796,7 @@ class TxTable:
                 else:
                     bloom_pruned += 1
             keep = survived
-        stats = {
-            "files_total": len(live),
-            "files_read": len(keep),
-            "files_bloom_pruned": bloom_pruned,
-        }
-        df = self._read_files(
-            schema, [a["path"] for a in keep], dvs, self._col_mapping(meta)
-        )
-        for c, (lo, hi) in preds.items():
-            df = df.filter((F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi)))
-        return df, stats
+        return keep, bloom_pruned
 
     def changes(
         self, start_version: int = -1, end_version: int | None = None
@@ -912,7 +956,7 @@ class TxTable:
                     T.StructField("_commit_version", T.LongType(), False),
                 ]
             )
-            return self.spark.createDataFrame([], out_schema)
+            return empty_frame(self.spark, out_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

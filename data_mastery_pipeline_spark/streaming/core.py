@@ -112,7 +112,7 @@ def run_available_now(
     and the throwaway checkpoint dir are reclaimed HERE instead of
     accumulating one pinned-in-memory table + one temp dir per
     invocation for the session's lifetime (review r6). The previous
-    ``collect()`` + ``createDataFrame(rows, schema)`` round trip moved
+    ``collect()`` + ``createDataFrame`` round trip moved
     every result row JVM→Python→JVM with per-row type verification —
     measured 7+ s on a 72 k-row CDC drain (guide §4: keep data out of
     the Python boundary) — and re-parallelized it as a Python RDD that
