@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .localrel import local_frame
+from .parallelism import fan_out
 from .registry import quantize, query, sql_quantize
 from .sources import rest, runlog, writers
 from .tables import load_table
@@ -830,40 +831,27 @@ def zorder_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6-twin on AVRO, from-scratch (sources/avrofmt.py): events →
-    deflate-coded Object Container Files (one per Spark partition,
-    executor-side, tmp-rename atomically) → parallel scan (one input
-    partition per file, per-block sync-verified decode) → aggregate.
-    The container ships no Avro support at all (no spark-avro jar, no
-    avro/fastavro wheel), so the codec is implemented from the public
-    Avro 1.11 spec — the pgwire/kafkawire precedent applied to a file
-    format. Proves zigzag varints, IEEE754 doubles, µs timestamps,
-    null unions, and raw-deflate blocks survive the round trip
-    bit-exactly against the identity-shaped oracle."""
+    ``avrofmt.write`` (deflate-coded Object Container Files, one per
+    Spark partition, encoded in one ``mapInArrow``, tmp-rename
+    atomically) → ``avrofmt.read`` (driver-side planning, one input
+    partition per file, per-block sync-verified decode in one
+    ``mapInArrow``) → aggregate. The container ships no Avro support
+    at all (no spark-avro jar, no avro/fastavro wheel), so the codec is
+    implemented from the public Avro 1.11 spec — the pgwire/kafkawire
+    precedent applied to a file format. Proves zigzag varints, IEEE754
+    doubles, µs timestamps, null unions, and raw-deflate blocks survive
+    the round trip bit-exactly against the identity-shaped oracle."""
     from .sources import avrofmt
 
-    avrofmt.register(spark)
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    # The writer encodes in Python one task per partition; a small
-    # parquet input arrives as ONE scan split, serializing the whole
-    # encode (+ the read of the single output file) onto one core —
-    # measured 3.7 s write + 2.0 s read at sf0.1 (guide §2: the
-    # distributed algorithm first). Fan out to the session's
-    # parallelism when the scan is narrower; at real scale the input
-    # already has ≥ cores partitions and this is a no-op.
-    target = spark.sparkContext.defaultParallelism
-    if ev.rdd.getNumPartitions() < target:
-        ev = ev.repartition(target)
+    # The encode runs in Python, one task per partition; a small parquet
+    # input arrives as ONE scan split, which would serialize the whole
+    # encode (and the read of the single output file) onto one core.
     path = _fresh_dir("avro", sf_dir)
-    (
-        ev.write.format("avro_py")
-        .option("path", path)
-        .option("codec", "deflate")
-        .mode("append")
-        .save()
-    )
-    back = spark.read.format("avro_py").option("path", path).load()
+    avrofmt.write(fan_out(ev), path, codec="deflate")
+    back = avrofmt.read(spark, path)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         quantize(F.sum("value"), "sum_value"),

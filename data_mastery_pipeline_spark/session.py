@@ -83,6 +83,12 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
+        # one benchmark lake pass (perfbench's five lake ops) generates
+        # 118-119 distinct classes; at the default cache of 100 every
+        # warm pass recompiled 87-89 of them (LRU thrash across ops; at
+        # this size a second pass compiles 0, tests/test_codegen_cache).
+        # Static conf: takes effect when the session is first built.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in (extra_conf or {}).items():

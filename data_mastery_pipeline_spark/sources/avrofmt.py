@@ -1,4 +1,4 @@
-"""Avro Object Container Files — from-scratch codec + Python DataSource.
+"""Avro Object Container Files — from-scratch codec + Spark read/write.
 
 The container ships no Avro connector (no spark-avro jar, no
 fastavro/avro wheel), so this module implements the PUBLIC Avro 1.11
@@ -25,6 +25,15 @@ reader and a different writer schema.
 Reference parity: the reference lake is parquet-only
 (kafka_consumer_s3.py:146-160); Avro is beyond-reference format
 breadth, the interchange format Kafka ecosystems actually emit.
+
+Spark surface: :func:`write` (``df`` → one .avro file per Spark
+partition) and :func:`read` (files → DataFrame). Both run the codec in
+one ``mapInArrow`` each; read planning — header schema, per-file schema
+check, split list — runs on the driver in-process. Not a Python Data
+Source: its look-up, schema, read-planning, writer and commit steps each
+run in a driver-side Python worker of its own, one sequential round trip
+per step (plus a worker start per step in a fresh process), and a
+batch-only format gets nothing else from that API.
 
 100 TB notes: one .avro file per Spark partition on write. On read,
 one input partition per file by default, and with ``split_bytes`` set
@@ -382,7 +391,8 @@ def read_header(fh) -> tuple[T.StructType, str, bytes, int]:
     Avro metadata maps legally carry arbitrary entries, e.g. embedded
     lineage blobs — parses instead of failing as 'truncated input'
     (review r6: a single fixed 1 MiB read capped the metadata region)."""
-    cur = _FileCursor(fh, 0)
+    # small first read: read() plans by parsing every file's header
+    cur = _FileCursor(fh, 0, chunk=64 << 10)
     head = cur.read(4)
     if head != MAGIC:
         raise IOError(f"avro: bad magic {head!r}")
@@ -608,15 +618,15 @@ def read_container_range(
             return
 
 
-# ------------------------------------------------------ Spark DataSource
+# ------------------------------------------------------ Spark read/write
 
 
 def _pa_schema(schema: T.StructType):
-    """Arrow schema for the Arrow-batched datasource boundary.
-    Temporals map to the raw-int forms the raw_temporal codec paths
-    speak (timestamp[us, UTC] from µs ints — the session runs UTC —
-    and date32 from day-epoch ints), so neither direction constructs a
-    datetime/date object per value."""
+    """Arrow schema of the ``mapInArrow`` boundary. Temporals map to the
+    raw-int forms the raw_temporal codec paths speak (timestamp[us, UTC]
+    from µs ints — the session runs UTC — and date32 from day-epoch
+    ints), so neither direction constructs a datetime/date object per
+    value."""
     import pyarrow as pa
 
     m = {
@@ -635,170 +645,122 @@ def _pa_schema(schema: T.StructType):
     )
 
 
-def register(spark) -> None:
-    """Register the ``avro_py`` batch source/sink on this session.
+def _encoder(path: str, schema: T.StructType, codec: str):
+    """``mapInArrow`` body of :func:`write`: the partition's batches →
+    one container file, staged as ``.tmp`` and renamed only after a
+    full encode (a task that dies mid-file leaves a ``.tmp`` the reader
+    skips). Temporal columns are int-cast in Arrow (a buffer
+    reinterpret, no value loop) and the raw_temporal encoder writes the
+    ints straight into the varint stream. Emits one row: the count."""
 
-    Both directions cross the Python-worker boundary as ARROW BATCHES
-    (r12, guide §4 — rows previously crossed as pickled tuples): the
-    reader yields one RecordBatch per container block, the writer is a
-    DataSourceArrowWriter consuming RecordBatches and feeding the
-    encoder int-cast columns. The codec itself stays row-oriented
-    Python — that is the from-scratch format, not the boundary."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceArrowWriter,
-        DataSourceReader,
-        InputPartition,
-        WriterCommitMessage,
-    )
+    def encode(batches):
+        import pyarrow as pa
 
-    class _FilePartition(InputPartition):
-        def __init__(self, path: str, start: int = 0, end: int | None = None):
-            self.path = path
-            self.start = start
-            self.end = end
+        casts = [
+            {"timestamp": pa.int64(), "date": pa.int32()}.get(
+                f.dataType.typeName()
+            )
+            for f in schema.fields
+        ]
 
-    class AvroReader(DataSourceReader):
-        """One input partition per file by default; with ``split_bytes``
-        set, large files fan out into byte-range splits resolved to
-        whole blocks by sync-marker scan (read_container_range) — the
-        Hadoop Avro split model, so a single giant container still
-        parallelizes across the cluster."""
-
-        def __init__(self, options, schema):
-            self.path = options["path"]
-            self.declared = schema
-            sb = options.get("split_bytes")
-            self.split_bytes = int(sb) if sb is not None else None
-
-        def partitions(self):
-            parts = []
-            for p in _list_avro(self.path):
-                if self.split_bytes is None:
-                    parts.append(_FilePartition(p))
-                    continue
-                fsize = os.path.getsize(p)
-                step = max(self.split_bytes, 1 << 16)
-                for off in range(0, fsize, step):
-                    parts.append(_FilePartition(p, off, min(off + step, fsize)))
-            return parts
-
-        def read(self, part):
-            import pyarrow as pa
-
-            pas = _pa_schema(self.declared)
-            if part.end is None:
-                src = read_container(
-                    part.path, self.declared, blocks=True, raw_temporal=True
-                )
-            else:
-                src = read_container_range(
-                    part.path,
-                    part.start,
-                    part.end,
-                    self.declared,
-                    blocks=True,
-                    raw_temporal=True,
-                )
-            for rows in src:
-                if not rows:
-                    continue
-                cols = list(zip(*rows))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(c, type=t)
-                        for c, t in zip(cols, pas.types)
-                    ],
-                    schema=pas,
-                )
-
-    class _Written(WriterCommitMessage):
-        pass
-
-    class AvroWriter(DataSourceArrowWriter):
-        """One container file per Spark partition. Files are staged
-        with a ``.tmp`` suffix and renamed only after a full successful
-        encode, so a task that dies mid-file leaves a ``.tmp`` the
-        reader skips. A RETRIED task that already renamed produces a
-        duplicate uuid file — at-least-once, same contract as the
-        kafka_wire sink (documented there); exactly-once needs a
-        commit-protocol manifest, which real tables get from their
-        format layer.
-
-        Arrow writer (r12): ``write`` receives RecordBatches; temporal
-        columns are int-cast in Arrow (a buffer reinterpret, no value
-        loop) and the raw_temporal encoder writes the ints straight
-        into the varint stream."""
-
-        def __init__(self, options, schema):
-            self.path = options["path"]
-            self.schema = schema
-            self.codec = options.get("codec", "deflate")
-
-        def _tuples(self, batches):
-            import pyarrow as pa
-
-            temporal = [
-                i
-                for i, f in enumerate(self.schema.fields)
-                if f.dataType.typeName() in ("timestamp", "date")
-            ]
+        def tuples():
             for batch in batches:
-                cols = []
-                for i in range(batch.num_columns):
-                    col = batch.column(i)
-                    if i in temporal:
-                        col = col.cast(
-                            pa.int64()
-                            if self.schema.fields[i].dataType.typeName()
-                            == "timestamp"
-                            else pa.int32()
-                        )
-                    cols.append(col.to_pylist())
+                cols = [
+                    (c if t is None else c.cast(t)).to_pylist()
+                    for c, t in zip(batch.columns, casts)
+                ]
                 yield from zip(*cols)
 
-        def write(self, batches):
-            os.makedirs(self.path, exist_ok=True)
-            name = f"part-{uuid.uuid4().hex}.avro"
-            tmp = os.path.join(self.path, name + ".tmp")
-            write_container(
-                tmp,
-                self.schema,
-                self._tuples(batches),
-                self.codec,
-                raw_temporal=True,
-            )
-            os.rename(tmp, os.path.join(self.path, name))
-            return _Written()
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.avro"
+        tmp = os.path.join(path, name + ".tmp")
+        n = write_container(tmp, schema, tuples(), codec, raw_temporal=True)
+        os.rename(tmp, os.path.join(path, name))
+        yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())], ["n"])
 
-        def commit(self, messages):
-            return None
+    return encode
 
-        def abort(self, messages):  # pragma: no cover
-            return None
 
-    class AvroDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "avro_py"
+def write(df, path: str, codec: str = "deflate") -> int:
+    """Append ``df`` under directory ``path`` as one container file per
+    Spark partition (an empty partition writes a file with no blocks);
+    returns the row count. One ``mapInArrow`` job encodes in the
+    executors' Python workers. A RETRIED task that already renamed
+    leaves a duplicate uuid file — at-least-once, same contract as the
+    kafka_wire sink; exactly-once needs a commit-protocol manifest,
+    which real tables get from their format layer."""
+    if codec not in ("null", "deflate"):
+        raise ValueError(f"avro: unsupported codec {codec}")
+    schema_to_avro_json(df.schema)  # unsupported types fail before any task
+    counts = df.mapInArrow(_encoder(path, df.schema, codec), "n long")
+    return sum(r.n for r in counts.collect())
 
-        def schema(self):
-            files = _list_avro(self.options["path"])
-            if not files:
-                raise IOError(f"avro: no .avro files under {self.options['path']}")
-            with open(files[0], "rb") as fh:
-                schema, _, _, _ = read_header(fh)
-            return schema
 
-        def reader(self, schema):
-            return AvroReader(self.options, schema)
+def _decoder(splits: list[tuple], schema: T.StructType):
+    """``mapInArrow`` body of :func:`read`: each input id names a split
+    ``(file, start, end)`` (``end`` None = the whole file); yields one
+    RecordBatch per container block."""
 
-        def writer(self, schema, overwrite):
-            if overwrite:
-                raise ValueError("avro_py: append-only sink; no overwrite")
-            return AvroWriter(self.options, schema)
+    def decode(batches):
+        import pyarrow as pa
 
-    spark.dataSource.register(AvroDataSource)
+        pas = _pa_schema(schema)
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                p, start, end = splits[i]
+                if end is None:
+                    src = read_container(
+                        p, schema, blocks=True, raw_temporal=True
+                    )
+                else:
+                    src = read_container_range(
+                        p, start, end, schema, blocks=True, raw_temporal=True
+                    )
+                for rows in src:
+                    if rows:
+                        yield pa.RecordBatch.from_arrays(
+                            [
+                                pa.array(c, type=t)
+                                for c, t in zip(zip(*rows), pas.types)
+                            ],
+                            schema=pas,
+                        )
+
+    return decode
+
+
+def read(spark, path: str, split_bytes: int | None = None):
+    """Scan a container file or a directory of them. Planning runs here
+    on the driver: the schema is the first file's header, and every
+    other file must declare the same one (IOError otherwise). One input
+    partition per file by default; with ``split_bytes`` set (floored at
+    64 KiB) large files fan out into byte-range splits resolved to whole
+    blocks by sync-marker scan (:func:`read_container_range` — the
+    Hadoop Avro split model, so one giant container still parallelizes).
+    The decode is one ``mapInArrow`` over one id per split."""
+    files = _list_avro(path)
+    if not files:
+        raise IOError(f"avro: no .avro files under {path}")
+    schema = _header_schema(files[0])
+    for p in files[1:]:
+        _check_declared(_header_schema(p), schema)
+    splits: list[tuple] = []
+    for p in files:
+        if split_bytes is None:
+            splits.append((p, 0, None))
+            continue
+        fsize = os.path.getsize(p)
+        step = max(split_bytes, 1 << 16)
+        splits.extend(
+            (p, off, min(off + step, fsize)) for off in range(0, fsize, step)
+        )
+    ids = spark.range(len(splits), numPartitions=len(splits))
+    return ids.mapInArrow(_decoder(splits, schema), schema)
+
+
+def _header_schema(path: str) -> T.StructType:
+    with open(path, "rb") as fh:
+        return read_header(fh)[0]
 
 
 def _list_avro(path: str) -> list[str]:

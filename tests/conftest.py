@@ -27,7 +27,9 @@ deep property sweep:
   sweeps (many sequential bounded actions each);
 - test_search: SearchIndex incremental-maintenance sweeps — every DML
   shape (append, delete, UPDATE, vacuum, replay) checked against a
-  from-scratch rebuild, each a run of sequential txlog commits.
+  from-scratch rebuild, each a run of sequential txlog commits;
+- test_codegen_cache: two full passes of the benchmark's lake ops
+  (about 30 s cold) to show the codegen cache holds a pass.
 """
 
 from __future__ import annotations
@@ -57,6 +59,7 @@ FULL_TIER = {
     "test_txlog_replace.py",
     "test_search.py",
     "test_streaming.py",
+    "test_codegen_cache.py",
 }
 
 

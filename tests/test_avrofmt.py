@@ -1,6 +1,6 @@
-"""From-scratch Avro container codec + DataSource (sources/avrofmt.py):
-binary-encoding edges, container integrity failures, and the Spark
-round trip."""
+"""From-scratch Avro container codec + Spark read/write
+(sources/avrofmt.py): binary-encoding edges, container integrity
+failures, and the Spark round trip."""
 
 from __future__ import annotations
 
@@ -99,35 +99,60 @@ def test_null_in_non_nullable_field_rejected():
         A.encode_rows(SCHEMA, [(None, None, None, True, None, None, None)])
 
 
-def test_datasource_roundtrip_parallel_files(spark, tmp_path):
-    """events → avro_py sink (one file per partition) → avro_py scan
+def test_roundtrip_parallel_files(spark, tmp_path):
+    """events → avrofmt.write (one file per partition) → avrofmt.read
     (one input partition per file): identity, including µs timestamps;
     .tmp staging files are invisible to the reader."""
-    A.register(spark)
     ev = load_table(spark, "events", SF_SMOKE).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     path = str(tmp_path / "events_avro")
-    (
-        ev.repartition(4)
-        .write.format("avro_py")
-        .option("path", path)
-        .option("codec", "deflate")
-        .mode("append")
-        .save()
-    )
+    assert A.write(ev.repartition(4), path, codec="deflate") == ev.count()
     (tmp_path / "events_avro" / "garbage.avro.tmp").write_bytes(b"partial")
-    back = spark.read.format("avro_py").option("path", path).load()
+    back = A.read(spark, path)
     assert back.count() == ev.count()
     a = sorted(tuple(r) for r in ev.collect())
     b = sorted(tuple(r) for r in back.collect())
     assert a == b
     files = [f for f in (tmp_path / "events_avro").iterdir() if f.suffix == ".avro"]
     assert len(files) == 4  # one container per partition
+    assert back.rdd.getNumPartitions() == 4  # one input partition per file
     # schema inference off the file header matches the written frame
     assert [f.name for f in back.schema.fields] == [
         "event_id", "ts", "user_id", "event_type", "value",
     ]
+
+
+def test_empty_partition_writes_an_empty_container(spark, tmp_path):
+    path = str(tmp_path / "sparse")
+    df = spark.range(0, 2, numPartitions=3)
+    assert A.write(df, path) == 2
+    assert len([f for f in (tmp_path / "sparse").iterdir()]) == 3
+    assert sorted(r.id for r in A.read(spark, path).collect()) == [0, 1]
+
+
+def test_read_rejects_a_file_with_another_schema(spark, tmp_path):
+    """Every file must declare the first file's header schema; the
+    mismatch is caught while planning, before any task runs."""
+    d = tmp_path / "mixed"
+    d.mkdir()
+    A.write_container(str(d / "a.avro"), SCHEMA, ROWS)
+    other = T.StructType([T.StructField("a", T.StringType(), False)])
+    A.write_container(str(d / "b.avro"), other, [("x",)])
+    with pytest.raises(IOError, match="file schema"):
+        A.read(spark, str(d))
+
+
+def test_avro_roundtrip_plan_has_no_data_source_scan(spark):
+    """The op's encode and decode are plain mapInArrow stages: no
+    Python Data Source scan (BatchScan) is left in the executed plan."""
+    from data_mastery_pipeline_spark.queries_src import avro_roundtrip
+
+    df = avro_roundtrip(spark, SF_SMOKE)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan" not in plan, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_range_splits_cover_exactly_once():
@@ -181,30 +206,17 @@ def test_range_splits_survive_sync_marker_embedded_in_data():
         assert got == expect, (nsplits, got)
 
 
-def test_datasource_split_bytes_parallelizes_one_big_file(spark, tmp_path):
+def test_split_bytes_parallelizes_one_big_file(spark, tmp_path):
     """A single large container read with split_bytes produces multiple
     input partitions and the identical row set."""
     from conftest import SF_ORACLE
 
-    A.register(spark)
     ev = load_table(spark, "events", SF_ORACLE).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )  # sf0.01: ~600 KB uncompressed > several 64 KiB splits
     path = str(tmp_path / "one_file")
-    (
-        ev.coalesce(1)
-        .write.format("avro_py")
-        .option("path", path)
-        .option("codec", "null")
-        .mode("append")
-        .save()
-    )
-    back = (
-        spark.read.format("avro_py")
-        .option("path", path)
-        .option("split_bytes", 1 << 16)  # clamped floor: 64 KiB
-        .load()
-    )
+    A.write(ev.coalesce(1), path, codec="null")
+    back = A.read(spark, path, split_bytes=1 << 16)  # clamped floor: 64 KiB
     assert back.rdd.getNumPartitions() > 1
     assert sorted(tuple(r) for r in back.collect()) == sorted(
         tuple(r) for r in ev.collect()
